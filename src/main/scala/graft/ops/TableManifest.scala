@@ -41,8 +41,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   *
   * Exactly-once ingest: a commit may carry PER-WRITER BATCH WATERMARKS
   * (a `"writers": {id → highest batch}` map in the manifest — Delta's
-  * txnAppId/txnVersion model; a legacy r10 `"batch"` field reads as the
-  * default writer's). [[append]] with a (writerId, batchId) skips
+  * txnAppId/txnVersion model). [[append]] with a (writerId, batchId) skips
   * committing when that writer's watermark equals it — a Structured
   * Streaming `foreachBatch` replay after a crash re-offers the last
   * batch with the same id and lands exactly once ([[streamingSink]]) —
@@ -70,6 +69,15 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * directory metadata — the protocol adds zero data cost over the
   * rewrite itself.
   *
+  * ONE WIRE FORM: every manifest and checkpoint body carries
+  * `"format":`[[FormatVersion]] and, for each generation it lists, a
+  * [[GenMeta]] inventory with the generation's recorded read schema.
+  * [[parseSnapshotBody]] refuses anything else — a missing or unknown
+  * format, or a generation without inventory or schema — with an
+  * `IllegalStateException` naming the manifest path and the format it
+  * found, so every read and commit path past the parse relies on the
+  * manifest alone (no listing, footer or legacy-field fallback).
+  *
   * Reference analogue: the backup-before-load rollback discipline
   * (services/jcap_pa_etl_service.py:131-170) — here extended so READERS
   * are isolated from the maintenance, not just the data recoverable.
@@ -81,17 +89,17 @@ object TableManifest {
   private val CheckpointPrefix = "_graft_checkpoint-"
   private val HintFile = "_graft_last_checkpoint"
 
-  /** The RETENTION BARRIER control file: `{"seq":M}` = no commit may
-    * land below seq M (monotonic, written by [[truncateLog]] BEFORE it
-    * deletes anything). The second phase of live-writer-safe log
-    * retention — see the barrier protocol on [[commitSnapshot]]. */
-  private val BarrierFile = "_graft_min_seq"
-
-  /** CAS-published barrier VALUES (one immutable file per raised
-    * value; [[readBarrier]] takes the max) — the monotonic successor
-    * of the legacy [[BarrierFile]] replace-file, which last-writer-
-    * wins semantics let a slow truncator regress. */
+  /** The RETENTION BARRIER: no commit may land below seq M, where M is
+    * the max over the CAS-published value files in this directory (one
+    * immutable file per raised value, written by [[truncateLog]] BEFORE
+    * it deletes anything — monotonic by construction). The second
+    * phase of live-writer-safe log retention — see the barrier protocol
+    * on [[commitSnapshot]]. */
   private val BarrierDir = "_graft_barrier"
+
+  /** The manifest wire-format version every body [[renderSnapshot]]
+    * writes and the only one [[parseSnapshotBody]] accepts. */
+  private[graft] val FormatVersion = 1
 
   /** Write a state checkpoint every this-many commits (the seam that
     * makes head resolution O(window) instead of O(table age) — see
@@ -158,16 +166,20 @@ object TableManifest {
     * [[FileMeta]] per data file, — while a [[ColumnMapping]] is
     * active — the `(column id, physical name)` binding at the
     * generation's write time, and the generation's READ SCHEMA
-    * (`StructType.json`, captured at commit time from the same
-    * single-footer `spark.read.parquet` resolution the scan itself
-    * would otherwise perform) — so scan CONSTRUCTION needs zero
-    * filesystem calls at all: files and sizes from the inventory,
-    * schema from the manifest. None on pre-schema manifests (the scan
-    * then pays its one footer read, exactly the old behavior). */
+    * (`StructType.json` — [[writtenSchemaJson]] of the frame the
+    * writer wrote, byte-identical to footer inference). Every
+    * generation of a format-[[FormatVersion]] snapshot carries one (the
+    * parse refuses a snapshot that lacks any), so scan CONSTRUCTION
+    * needs zero filesystem calls: files and sizes from the inventory,
+    * schema from the manifest. */
   private[graft] case class GenMeta(statsCol: Option[String],
                                     files: Seq[FileMeta],
-                                    cols: Seq[(Int, String)] = Seq.empty,
-                                    schemaJson: Option[String] = None)
+                                    cols: Seq[(Int, String)],
+                                    schemaJson: String) {
+    def schema: org.apache.spark.sql.types.StructType =
+      org.apache.spark.sql.types.DataType.fromJson(schemaJson)
+        .asInstanceOf[org.apache.spark.sql.types.StructType]
+  }
 
   /** The MERGE-ON-READ resolution rule a snapshot carries while any
     * DELTA generation is live ([[upsertBucketedDelta]]): readers
@@ -192,9 +204,7 @@ object TableManifest {
 
   /** One committed table version: the generation set that makes up the
     * table at that version and the PER-WRITER exactly-once batch
-    * watermarks (Delta's txnAppId/txnVersion model — r10's single
-    * global `batch` field become a map, exactly the extension point its
-    * watermark contract named).
+    * watermarks (Delta's txnAppId/txnVersion model).
     *
     * `buckets` is Some(N) iff the version was committed by
     * [[upsertBucketed]] with every generation bucket-tagged — the
@@ -211,18 +221,16 @@ object TableManifest {
     * bucket-locality decision (bucket-granular pruning, bucket-bounded
     * folds and point reads, delta reuse of an existing layout) is
     * sound only when the decision's keys EQUAL the layout's. A
-    * recorded mismatch refuses or re-buckets loudly; an absent record
-    * (legacy manifests) reads conservatively — no bucket-locality
-    * shortcut, one whole-table re-bucket on the next bucketed upsert.
+    * recorded mismatch refuses or re-buckets loudly. Every writer that
+    * records `buckets` records `bucketKeys` with it.
     *
-    * `meta` records each generation's data-file inventory
-    * ([[GenMeta]]): committing writers record it for the generations
-    * they WRITE and carry forward the base snapshot's entries for the
-    * generations they keep, so the read path resolves file sets from
-    * ONE manifest parse — zero directory listings. It is an
-    * OPTIMIZATION, never a correctness input: a generation absent
-    * from the map (a legacy commit) falls back to one pooled listing
-    * and its files are conservatively included by any pruning. */
+    * `meta` records each generation's data-file inventory and read
+    * schema ([[GenMeta]]): committing writers record it for the
+    * generations they WRITE and carry forward the base snapshot's
+    * entries for the generations they keep. It is TOTAL — every listed
+    * generation has an entry, enforced by [[parseSnapshotBody]] — so
+    * the read path resolves file sets and schemas from ONE manifest
+    * parse, with zero directory listings or footer reads. */
   private[graft] case class Snapshot(generations: Seq[String],
                                      writers: Map[String, Long],
                                      buckets: Option[Int] = None,
@@ -285,20 +293,19 @@ object TableManifest {
     finally in.close()
   }
 
-  /** Parse a manifest body. Three wire forms, all emitted by this
-    * file's history: `{"generation":"g"}` (single, the r10 original),
-    * `{"generations":[…],"batch":7}` (set + single global watermark,
-    * r10 final), and `{"generations":[…],"writers":{"id":7,…}}`
-    * (per-writer watermarks, r11 — a legacy `batch` reads as the
-    * [[DefaultWriter]]'s watermark, so r10 tables upgrade in place).
+  /** Parse a manifest or checkpoint body — the ONE place old or foreign
+    * data is refused. The only accepted form is
+    * `{"format":1,"generations":[…],"writers":{…},…,"meta":{…}}`: a
+    * missing or unknown `format`, or a listed generation without a
+    * `meta` inventory carrying its recorded `schema`, throws an
+    * `IllegalStateException` naming `where` and the format found.
+    * Every consumer of a [[Snapshot]] may therefore rely on `meta`
+    * being total over `generations`.
     *
     * Extraction is TOP-LEVEL-ANCHORED (a real JSON parse, json4s on
     * Spark's own jackson), not regex-over-body: an r11 review found
     * that regex field extraction let WRITER IDS alias protocol fields —
-    * a writer named "batch" rendered a `"batch":7` pair inside the
-    * writers map that the legacy-batch regex matched (a phantom
-    * default-writer watermark silently skipping real batches), and a
-    * writer named "buckets" fed [[readKeyBuckets]] the wrong modulus.
+    * a writer named "buckets" fed [[readKeyBuckets]] the wrong modulus.
     * With the parse structural, a writers-map key can never be read as
     * a field ([[requireWriterId]] additionally refuses the reserved
     * names outright — belt and braces). */
@@ -322,19 +329,22 @@ object TableManifest {
       case JLong(n) => Some(n)
       case _ => None
     }
-    val gens: Option[Seq[String]] = (j \ "generations") match {
-      case JArray(xs) => Some(xs.collect { case JString(s) => s })
-      case _ => (j \ "generation") match {
-        case JString(s) => Some(Seq(s))
-        case _ => None
-      }
+    val format = long(j \ "format")
+    if (!format.contains(FormatVersion.toLong))
+      throw new IllegalStateException(
+        s"TableManifest: manifest at $where has format " +
+          s"${format.map(_.toString).getOrElse("<none>")}; this build " +
+          s"reads only format $FormatVersion — re-publish the table " +
+          "with this build")
+    val gens: Seq[String] = (j \ "generations") match {
+      case JArray(xs) => xs.collect { case JString(s) => s }
+      case _ => throw bad()
     }
     val writers: Map[String, Long] = (j \ "writers") match {
       case JObject(fields) =>
         fields.flatMap { case (k, v) => long(v).map(k -> _) }.toMap
       case _ => Map.empty
     }
-    val batch = long(j \ "batch")
     val buckets = long(j \ "buckets").map(_.toInt)
     def dbl(v: JValue): Option[Double] = v match {
       case JDouble(d) => Some(d)
@@ -356,8 +366,8 @@ object TableManifest {
           case JString(c) => Some(c)
           case _ => None
         }
-        (gm \ "files") match {
-          case JArray(fs) =>
+        ((gm \ "files"), (gm \ "schema")) match {
+          case (JArray(fs), JString(schema)) =>
             val files = fs.collect {
               // [name, size] or [name, size, lo, hi]
               case JArray(JString(n) :: rest) =>
@@ -367,10 +377,6 @@ object TableManifest {
                   case _ => (None, None)
                 }
                 FileMeta(n, size, range._1, range._2)
-            }
-            val schema = (gm \ "schema") match {
-              case JString(s) => Some(s)
-              case _ => None
             }
             Some(g -> GenMeta(col, files, idCols(gm \ "cols"), schema))
           case _ => None
@@ -423,10 +429,14 @@ object TableManifest {
         if (keys.isEmpty) throw bad() else Some(keys)
       case _ => None
     }
-    Snapshot(gens.getOrElse(throw bad()),
-      mergeWriters(writers,
-        batch.map(b => Map(DefaultWriter -> b)).getOrElse(Map.empty)),
-      buckets, meta, merge, parts, partCol, delete, columns, bucketKeys)
+    val uninventoried = gens.filterNot(meta.keySet)
+    if (uninventoried.nonEmpty)
+      throw new IllegalStateException(
+        s"TableManifest: manifest at $where (format $FormatVersion) lists " +
+          s"generation(s) ${uninventoried.mkString(",")} with no recorded " +
+          "inventory or schema — corrupt log?")
+    Snapshot(gens, writers, buckets, meta, merge, parts, partCol, delete,
+      columns, bucketKeys)
   }
 
   private def renderSnapshot(s: Snapshot): String = {
@@ -466,21 +476,24 @@ object TableManifest {
         s""","partcol":${graft.JsonEscape.str(s.partCol.get)}""" +
           s""","parts":$entries"""
       }
-    // file inventories render only for generations this snapshot holds
-    // (metaFor at every carry-forward site makes this a no-op filter,
-    // but the render is the last line of defense against a stale entry)
-    val live = s.metaFor(s.generations)
+    // inventories render in generation order and only for generations
+    // this snapshot holds (stale entries for dropped generations never
+    // ride along); a generation WITHOUT one would commit a body the
+    // parse refuses, so fail here, before anything is published
+    val missing = s.generations.filterNot(s.meta.keySet)
+    require(missing.isEmpty,
+      s"TableManifest: refusing to render a snapshot whose generations " +
+        s"${missing.mkString(",")} carry no inventory")
     val meta =
-      if (live.isEmpty) ""
-      else s.generations.flatMap(g => live.get(g).map(g -> _))
+      if (s.generations.isEmpty) ""
+      else s.generations.map(g => g -> s.meta(g))
         .map { case (g, gm) =>
           val col = gm.statsCol
             .map(c => s""""col":${graft.JsonEscape.str(c)},""").getOrElse("")
           val bound =
             (if (gm.cols.isEmpty) ""
              else s""""cols":${idCols(gm.cols)},""") +
-            gm.schemaJson.map(s =>
-              s""""schema":${graft.JsonEscape.str(s)},""").getOrElse("")
+            s""""schema":${graft.JsonEscape.str(gm.schemaJson)},"""
           val files = gm.files.map { f =>
             val range = (f.lo, f.hi) match {
               case (Some(l), Some(h)) => s",$l,$h"
@@ -490,8 +503,8 @@ object TableManifest {
           }.mkString("[", ",", "]")
           s"""${graft.JsonEscape.str(g)}:{$col$bound"files":$files}"""
         }.mkString(""","meta":{""", ",", "}")
-    s"""{"generations":$gens$writers$buckets$merge$delete$columns""" +
-      s"""$parts$meta}"""
+    s"""{"format":$FormatVersion,"generations":$gens$writers$buckets""" +
+      s"""$merge$delete$columns$parts$meta}"""
   }
 
   private def checkpointPath(tableDir: String, seq: Long): Path =
@@ -771,44 +784,33 @@ object TableManifest {
   private val RowSeqCol = "__graft_row_seq"
   private val DelSeqCol = "__graft_del_seq"
 
-  /** The scan over `gens`: when every generation carries a manifest
-    * inventory, the relation is built DIRECTLY from the recorded file
-    * paths and sizes ([[org.apache.spark.sql.graft.ManifestScanShim]])
-    * — the manifest, not the filesystem, is the source of truth for
-    * what a version contains, so scan planning performs zero listing
-    * or stat calls (at 30+ paths Spark's directory read otherwise
-    * launches a ~100 ms parallel-listing JOB per read; at object-store
-    * scale a LIST round-trip per generation). The read schema comes
-    * from ONE footer (the inventory's first file — the same
-    * single-footer semantics as a `mergeSchema=false` directory read,
-    * which also adopts one unspecified file's schema). Generations
-    * predating inventories, and `mergeSchema=true` reads (which must
-    * union EVERY footer), fall back to the directory read and pay the
-    * listing. Committed generation dirs are FLAT by construction
-    * (staging partition columns are lifted out before the rename), so
-    * the recorded inventory and a directory walk see the same files. */
+  /** The scan over `gens`, built DIRECTLY from the manifest-recorded
+    * file paths, sizes and read schema
+    * ([[org.apache.spark.sql.graft.ManifestScanShim]]) — the manifest,
+    * not the filesystem, is the source of truth for what a version
+    * contains, so scan planning performs zero listing, stat or footer
+    * calls (at 30+ paths Spark's directory read would launch a ~100 ms
+    * parallel-listing JOB per read; at object-store scale a LIST
+    * round-trip per generation). The read schema is the first
+    * non-empty generation's recorded one — the single-schema semantics
+    * of a `mergeSchema=false` directory read, which also adopts one
+    * file's schema. Only `mergeSchema=true` reads (which must union
+    * EVERY footer) read the generation directories. Committed
+    * generation dirs are FLAT by construction (staging partition
+    * columns are lifted out before the rename), so the recorded
+    * inventory and a directory walk see the same files. */
   private def scanGens(spark: SparkSession, tableDir: String,
                        snap: Snapshot, gens: Seq[String],
                        mergeSchema: Boolean = false): DataFrame = {
-    if (!mergeSchema && gens.forall(snap.meta.contains)) {
-      val files = gens.flatMap(g => snap.meta(g).files.map(fm =>
-        (s"$tableDir/$g/${fm.name}", fm.size)))
-      if (files.nonEmpty) {
-        // schema: the first non-empty generation's manifest-recorded
-        // read schema (captured at commit from the same single-footer
-        // resolution this fallback runs) — ZERO filesystem calls on
-        // the recorded path; pre-schema manifests pay the one footer
-        val schema = gens.find(g => snap.meta(g).files.nonEmpty)
-          .flatMap(g => snap.meta(g).schemaJson)
-          .map(s => org.apache.spark.sql.types.DataType.fromJson(s)
-            .asInstanceOf[org.apache.spark.sql.types.StructType])
-          .getOrElse(spark.read.parquet(files.head._1).schema)
-        return org.apache.spark.sql.graft.ManifestScanShim
-          .parquetScan(spark, tableDir, files, schema)
-      }
-    }
-    spark.read.option("mergeSchema", mergeSchema.toString)
-      .parquet(gens.map(g => s"$tableDir/$g"): _*)
+    if (mergeSchema)
+      return spark.read.option("mergeSchema", "true")
+        .parquet(gens.map(g => s"$tableDir/$g"): _*)
+    val files = gens.flatMap(g => snap.meta(g).files.map(fm =>
+      (s"$tableDir/$g/${fm.name}", fm.size)))
+    val schemaGen = gens.find(g => snap.meta(g).files.nonEmpty)
+      .getOrElse(gens.head)
+    org.apache.spark.sql.graft.ManifestScanShim
+      .parquetScan(spark, tableDir, files, snap.meta(schemaGen).schema)
   }
 
   /** Resolve content over `gens` (a subset of the snapshot's DATA
@@ -877,8 +879,8 @@ object TableManifest {
     * from the current mapping (dropped columns) are excluded from
     * every generation, and a re-added name's fresh id binds only in
     * generations written after the re-add — old values never
-    * resurrect. Generations without a recorded binding (pre-mapping
-    * legacy) bind conservatively by current name.
+    * resurrect. Every writer under a mapping records its generation's
+    * binding, so a data generation without one is refused as corrupt.
     *
     * TYPE WIDENING: a column whose physical type differs across
     * generations (an append evolved `int` → `long`, `float` →
@@ -886,9 +888,8 @@ object TableManifest {
     * lattice ([[widenedType]]) with every generation's scan cast to
     * it — old generations survive a schema widening losslessly, read
     * under the new type. The per-generation types come from the
-    * parquet footers the mapped read already opens for its schemas, so
-    * the widening decision costs no extra IO and needs no manifest
-    * record. A type pair OFF the lattice (`string` vs `int`,
+    * generations' recorded read schemas, so the widening decision
+    * costs no IO. A type pair OFF the lattice (`string` vs `int`,
     * `long` vs `double` — the lossy or senseless coercions Spark's
     * union would silently promote through) fails LOUDLY naming the
     * column and types instead. */
@@ -898,13 +899,14 @@ object TableManifest {
     import org.apache.spark.sql.functions.col
     val current: Map[Int, String] = mapping.cols.toMap
     // pass one: bind each generation's physical columns to ids and
-    // gather the physical type per id (from the already-open footers)
+    // gather the physical type per id (from the recorded schemas)
     val boundScans = gens.map { g =>
       val scan = scanGens(spark, tableDir, snap, Seq(g))
-      val bound: Seq[(Int, String)] =
-        snap.meta.get(g).map(_.cols).filter(_.nonEmpty).getOrElse(
-          // legacy generation: bind by current name (identity)
-          mapping.cols.filter { case (_, n) => scan.columns.contains(n) })
+      val bound = snap.meta(g).cols
+      if (bound.isEmpty)
+        throw new IllegalStateException(
+          s"TableManifest: generation $g at $tableDir has no column " +
+            "binding under the live column mapping — corrupt log?")
       val sel = bound.collect {
         case (id, phys)
             if current.contains(id) && scan.columns.contains(phys) =>
@@ -1028,28 +1030,19 @@ object TableManifest {
     * columns only (parquet stats surface them as numbers: DATE = epoch
     * days, TIMESTAMP = micros); a non-numeric column fails loudly, as
     * does a file with no non-null value — the same contract as the
-    * layout tier's range audits. */
+    * layout tier's range audits. `schemaJson` is the caller's
+    * [[writtenSchemaJson]] of the frame it wrote (zero IO). */
   private def collectGenMeta(spark: SparkSession, tableDir: String,
                              gen: String,
                              statsCol: Option[String],
-                             schemaJson: Option[String] = None): GenMeta = {
+                             schemaJson: String): GenMeta = {
     val files = dataFiles(fsOf(spark, tableDir), s"$tableDir/$gen")
       .sortBy(_.getPath.getName)
-    // the generation's read schema, captured ONCE at commit: single-
-    // generation writers pass [[writtenSchemaJson]] of the frame they
-    // just wrote (zero IO — verified byte-identical to the footer
-    // inference), staged multi-generation commits pass the first
-    // generation's value for the rest (one footer for the whole
-    // commit); absent both, ONE footer read via the exact resolution
-    // a scan would otherwise run per read. Scan construction then
-    // needs no filesystem call at all
-    val sj = schemaJson.orElse(files.headOption.map(f =>
-      spark.read.parquet(f.getPath.toString).schema.json))
     statsCol match {
       case None =>
         GenMeta(None,
           files.map(f => FileMeta(f.getPath.getName, f.getLen, None, None)),
-          schemaJson = sj)
+          Seq.empty, schemaJson)
       case Some(c) =>
         import org.apache.spark.sql.functions.{max, min}
         val ranges = Layout.parquetColumnStatsImpl(
@@ -1068,7 +1061,7 @@ object TableManifest {
         GenMeta(Some(c), files.map { f =>
           val r = ranges.get(f.getPath.getName)
           FileMeta(f.getPath.getName, f.getLen, r.map(_._1), r.map(_._2))
-        }, schemaJson = sj)
+        }, Seq.empty, schemaJson)
     }
   }
 
@@ -1112,29 +1105,36 @@ object TableManifest {
     * committed — metadata-priced, never a data scan. */
   private def inheritedStatsCol(snap: Snapshot,
                                 batchCols: Seq[String]): Option[String] = {
-    val declared = snap.dataGens.flatMap(snap.meta.get)
-      .map(_.statsCol).distinct
+    val declared = snap.dataGens.map(g => snap.meta(g).statsCol).distinct
     declared match {
       case Seq(Some(c)) if batchCols.contains(c) => Some(c)
       case _ => None // mixed, absent, or not a batch column: no stats
     }
   }
 
-  /** A pruned-read resolution: the selected file paths, the head's
-    * total file count, and how many DIRECTORY LISTINGS the resolution
-    * cost — the test seam for the zero-listing contract (a generation
-    * with manifest-recorded [[GenMeta]] is never listed; only legacy
-    * generations fall back, pooled). */
+  /** A pruned-read resolution: the selected file paths (with their
+    * recorded sizes) and the head's total file count. Resolved from
+    * the manifest inventory alone — no directory is ever listed. */
   private[graft] case class PruneInfo(files: Seq[(String, Long)],
-                                      total: Int, listings: Int)
+                                      total: Int)
+
+  /** Whether a file's recorded `[min,max]` on `statsCol` can intersect
+    * `[lo, hi]` — true (conservatively kept) when its generation
+    * recorded stats on another column or none, or the file has no
+    * recorded range. */
+  private def fileMayMatch(gm: GenMeta, fm: FileMeta, statsCol: String,
+                           lo: Double, hi: Double): Boolean =
+    !gm.statsCol.contains(statsCol) || ((fm.lo, fm.hi) match {
+      case (Some(flo), Some(fhi)) => fhi >= lo && flo <= hi
+      case _ => true // unknown range: conservative
+    })
 
   /** The data-file paths a `[lo, hi]` range on the declared stats
     * column needs, plus the head's total file count — the pruning
     * decision runs on MANIFEST metadata before Spark ever lists or
-    * opens a file (zero directory listings for manifest-inventoried
-    * generations). Files with no recorded range (generation written
-    * without stats, file absent from its inventory) are INCLUDED —
-    * pruning is an optimization, never a correctness input. */
+    * opens a file. Files with no recorded range (generation written
+    * without stats, or on another column) are INCLUDED — pruning is an
+    * optimization, never a correctness input. */
   private[graft] def prunedFiles(spark: SparkSession, tableDir: String,
                                  statsCol: String, lo: Double,
                                  hi: Double): (Seq[String], Int) = {
@@ -1149,7 +1149,7 @@ object TableManifest {
       throw new IllegalArgumentException(
         s"TableManifest: no manifest at $tableDir — not a manifested " +
           "table (publish() first)"))
-    prunedFilesInfo(spark, tableDir, head.snap, statsCol, lo, hi)
+    prunedFilesInfo(tableDir, head.snap, statsCol, lo, hi)
   }
 
   /** [[prunedFilesInfo]] against an ALREADY-RESOLVED snapshot — the
@@ -1160,57 +1160,20 @@ object TableManifest {
     * hand back a newer head's delta files with the older head's "no
     * merge rule" verdict — superseded and new versions of updated keys
     * both returned). */
-  private[graft] def prunedFilesInfo(spark: SparkSession, tableDir: String,
-                                     snap: Snapshot, statsCol: String,
-                                     lo: Double, hi: Double): PruneInfo = {
-    val selected = Seq.newBuilder[(String, Long)]
-    var total = 0
-    var listings = 0
+  private[graft] def prunedFilesInfo(tableDir: String, snap: Snapshot,
+                                     statsCol: String, lo: Double,
+                                     hi: Double): PruneInfo = {
     // DATA generations only: tombstones are key rows in another schema
     // (they are applied as a rule by readPruned, never scanned as data)
     // and delta generations ride along un-pruned via the conservative
     // no-stats branch — but see readPruned's merge guard
-    val (inventoried, legacy) =
-      snap.dataGens.partition(snap.meta.contains)
-    inventoried.foreach { g =>
-      val gm = snap.meta(g)
-      total += gm.files.size
-      gm.files.foreach { fm =>
-        val keep =
-          if (!gm.statsCol.contains(statsCol)) true // other/no column
-          else (fm.lo, fm.hi) match {
-            case (Some(flo), Some(fhi)) => fhi >= lo && flo <= hi
-            case _ => true // unknown range: conservative
-          }
-        if (keep) selected += ((s"$tableDir/$g/${fm.name}", fm.size))
-      }
-    }
-    if (legacy.nonEmpty) {
-      // pre-inventory generations (a legacy manifest): one listing per
-      // generation, fanned out on a bounded pool instead of the serial
-      // driver loop the r11 verdict flagged; no stats are recorded for
-      // them, so every file is conservatively included
-      val fs = fsOf(spark, tableDir)
-      val results =
-        new java.util.concurrent.ConcurrentLinkedQueue[Seq[(String, Long)]]()
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(16, legacy.size))
-      try {
-        legacy.map { g =>
-          pool.submit(new Runnable {
-            override def run(): Unit =
-              results.add(dataFiles(fs, s"$tableDir/$g")
-                .map(f => (f.getPath.toString, f.getLen)))
-          })
-        }.foreach(_.get())
-      } finally pool.shutdown()
-      listings += legacy.size
-      results.forEach { files =>
-        total += files.size
-        files.foreach(selected += _)
-      }
-    }
-    PruneInfo(selected.result(), total, listings)
+    val inventory = snap.dataGens.map(g => g -> snap.meta(g))
+    PruneInfo(
+      inventory.flatMap { case (g, gm) =>
+        gm.files.filter(fileMayMatch(gm, _, statsCol, lo, hi))
+          .map(fm => (s"$tableDir/$g/${fm.name}", fm.size))
+      },
+      inventory.map(_._2.files.size).sum)
   }
 
   /** Read the table with FILE-LEVEL pruning by the recorded per-file
@@ -1255,28 +1218,22 @@ object TableManifest {
         case None => readSnapshot(spark, tableDir, snap) // not bucketed
       }
     } else {
-      val files =
-        prunedFilesInfo(spark, tableDir, snap, statsCol, lo, hi).files
+      val files = prunedFilesInfo(tableDir, snap, statsCol, lo, hi).files
       if (files.isEmpty) read(spark, tableDir).limit(0) // schema only
       else {
         // plan the pruned selection through the inventory shim too —
-        // paths AND sizes come from the manifest (legacy generations'
-        // from the pooled listing that just ran), so the pruned read
-        // performs zero additional filesystem metadata calls, exactly
+        // paths, sizes and schema all come from the manifest, so the
+        // pruned read performs zero filesystem metadata calls, exactly
         // like the full read; the schema is the first selected file's
-        // generation's recorded schema (its parent dir name IS the
-        // generation), one footer read on pre-schema manifests
+        // generation's recorded one (its parent dir name IS the
+        // generation)
         val firstGen = {
           val p = files.head._1
           val parentEnd = p.lastIndexOf('/')
           p.substring(p.lastIndexOf('/', parentEnd - 1) + 1, parentEnd)
         }
-        val schema = snap.meta.get(firstGen).flatMap(_.schemaJson)
-          .map(s => org.apache.spark.sql.types.DataType.fromJson(s)
-            .asInstanceOf[org.apache.spark.sql.types.StructType])
-          .getOrElse(spark.read.parquet(files.head._1).schema)
         val scan = org.apache.spark.sql.graft.ManifestScanShim
-          .parquetScan(spark, tableDir, files, schema)
+          .parquetScan(spark, tableDir, files, snap.meta(firstGen).schema)
         // the row-delete rule is per-row and composes with any file
         // subset — apply it over the pruned scan
         applyDelete(spark, tableDir, snap, scan)
@@ -1287,33 +1244,24 @@ object TableManifest {
   /** The generation subset a merge-on-read BUCKETED table's range read
     * needs: every generation of every bucket where SOME file's recorded
     * `[min,max]` on `statsCol` can intersect `[lo, hi]` (a file with no
-    * recorded range, a generation with no inventory, and a generation
-    * whose stats were collected on another column all conservatively
-    * keep their bucket — pruning is an optimization, never a
-    * correctness input). Returns None when the table is not purely
-    * bucket-tagged (the winner rule is then not provably bucket-local
-    * and the caller must read whole). Metadata-only: the decision runs
+    * recorded range and a generation whose stats were collected on
+    * another column conservatively keep their bucket — pruning is an
+    * optimization, never a correctness input). Returns None when the
+    * table is not purely bucket-tagged (the winner rule is then not
+    * provably bucket-local and the caller must read whole). Metadata-only: the decision runs
     * on the manifest inventory, no file listed or opened. */
   private def prunedMergeBuckets(snap: Snapshot, statsCol: String,
                                  lo: Double, hi: Double)
       : Option[Seq[String]] = {
     // bucket-locality holds only when the tags are RECORDED hashed
-    // under the live merge rule's own keys — an unrecorded or
-    // mismatched provenance (legacy manifest; a layout bucketed under
-    // other keys surviving a fold) must read whole
+    // under the live merge rule's own keys — a mismatched provenance (a
+    // layout bucketed under other keys surviving a fold) must read whole
     if (snap.buckets.isEmpty ||
         !snap.merge.exists(m => snap.bucketKeys.contains(m.keys)) ||
         !snap.dataGens.forall(g => bucketOf(g).isDefined)) return None
-    def genMayMatch(g: String): Boolean = snap.meta.get(g) match {
-      case None => true // legacy, no inventory: conservative
-      case Some(gm) =>
-        gm.files.exists { fm =>
-          if (!gm.statsCol.contains(statsCol)) true
-          else (fm.lo, fm.hi) match {
-            case (Some(flo), Some(fhi)) => fhi >= lo && flo <= hi
-            case _ => true // unknown range: conservative
-          }
-        }
+    def genMayMatch(g: String): Boolean = {
+      val gm = snap.meta(g)
+      gm.files.exists(fileMayMatch(gm, _, statsCol, lo, hi))
     }
     val surviving = snap.dataGens.filter(genMayMatch)
       .flatMap(bucketOf).toSet
@@ -1372,30 +1320,18 @@ object TableManifest {
   }
 
   /** The retention barrier's current value (0 = none): the max over
-    * the CAS-published value files in [[BarrierDir]], plus the legacy
-    * single replace-file for tables truncated by older code. Failure-
-    * open by design: an unreadable barrier restores the pre-barrier
-    * behavior (keepVersions-floor defense only), never blocks commits. */
+    * the CAS-published value files in [[BarrierDir]]. Failure-open by
+    * design: an unreadable barrier restores the pre-barrier behavior
+    * (keepVersions-floor defense only), never blocks commits. */
   private[graft] def readBarrier(spark: SparkSession,
-                                 tableDir: String): Long = {
-    val legacy =
-      try {
-        val p = new Path(tableDir, BarrierFile)
-        if (!fsOf(spark, tableDir).exists(p)) 0L
-        else """"seq"\s*:\s*(\d+)""".r
-          .findFirstMatchIn(readSmall(spark, p))
-          .map(_.group(1).toLong).getOrElse(0L)
-      } catch { case scala.util.control.NonFatal(_) => 0L }
-    val published =
-      try {
-        fsOf(spark, tableDir)
-          .listStatus(new Path(tableDir, BarrierDir))
-          .flatMap(e => scala.util.Try(
-            e.getPath.getName.stripSuffix(".json").toLong).toOption)
-          .foldLeft(0L)(math.max)
-      } catch { case scala.util.control.NonFatal(_) => 0L }
-    math.max(legacy, published)
-  }
+                                 tableDir: String): Long =
+    try {
+      fsOf(spark, tableDir)
+        .listStatus(new Path(tableDir, BarrierDir))
+        .flatMap(e => scala.util.Try(
+          e.getPath.getName.stripSuffix(".json").toLong).toOption)
+        .foldLeft(0L)(math.max)
+    } catch { case scala.util.control.NonFatal(_) => 0L }
 
   /** Raise the retention barrier to AT LEAST `seq`, monotonically,
     * through the certified fail-if-exists primitive: each value is its
@@ -1422,21 +1358,13 @@ object TableManifest {
       s"TableManifest: retention barrier at $tableDir reads $cur after " +
         s"publishing $seq — barrier store unreadable? Aborting before " +
         "any deletion.")
-    // hygiene: reap strictly-below-max value files and the legacy
-    // replace-file once a published value covers it
+    // hygiene: reap strictly-below-max value files
     try {
       val entries = fs.listStatus(dir).flatMap(e => scala.util.Try(
         e.getPath.getName.stripSuffix(".json").toLong).toOption
         .map(v => (v, e.getPath)))
       val hi = entries.map(_._1).foldLeft(0L)(math.max)
       entries.filter(_._1 < hi).foreach(e => fs.delete(e._2, false))
-      val legacy = new Path(tableDir, BarrierFile)
-      if (fs.exists(legacy) && cur >= seq) {
-        val lv = """"seq"\s*:\s*(\d+)""".r
-          .findFirstMatchIn(readSmall(spark, legacy))
-          .map(_.group(1).toLong).getOrElse(Long.MaxValue)
-        if (lv <= hi) fs.delete(legacy, false)
-      }
     } catch { case scala.util.control.NonFatal(_) => () }
   }
 
@@ -1499,7 +1427,7 @@ object TableManifest {
     val next = writeGeneration(spark, tableDir, nextSeq, df)
     val nextMeta = withGenReapedOnFailure(spark, tableDir, next) {
       collectGenMeta(spark, tableDir, next, statsCol,
-        Some(writtenSchemaJson(df.schema)))
+        writtenSchemaJson(df.schema))
     }
     val snap = Snapshot(Seq(next),
       cur.map(_.snap.writers).getOrElse(Map.empty),
@@ -1563,14 +1491,17 @@ object TableManifest {
       }
     }
 
-  /** Manifest field names a writer id must not shadow: the parse is
-    * top-level-anchored so aliasing is structurally impossible, but a
-    * writer literally named "batch" or "buckets" is a config error in
-    * the caller ninety-nine times in a hundred — refuse it loudly
-    * rather than record a legitimately confusing watermark. */
+  /** Manifest field names a writer id must not shadow — every
+    * top-level field of the wire form, plus the retired `batch` and
+    * `generation` fields: the parse is top-level-anchored so aliasing
+    * is structurally impossible, but a writer literally named "format"
+    * or "buckets" is a config error in the caller ninety-nine times in
+    * a hundred — refuse it loudly rather than record a legitimately
+    * confusing watermark. */
   private val ReservedWriterIds = Set(
-    "batch", "buckets", "writers", "generations", "generation", "seq",
-    "meta", "merge", "delete", "parts", "partcol", "files", "columns")
+    "format", "batch", "buckets", "bucketkeys", "writers", "generations",
+    "generation", "seq", "meta", "merge", "delete", "parts", "partcol",
+    "files", "columns")
 
   private def requireWriterId(writerId: String): Unit = {
     require(writerId.nonEmpty &&
@@ -1627,7 +1558,7 @@ object TableManifest {
     var gen = writeGeneration(spark, tableDir, base.seq + 1, df)
     val genMeta = withGenReapedOnFailure(spark, tableDir, gen) {
       collectGenMeta(spark, tableDir, gen, statsCol,
-        Some(writtenSchemaJson(df.schema)))
+        writtenSchemaJson(df.schema))
     }
     var attempts = 0
     while (attempts <= maxRetries) {
@@ -1747,7 +1678,7 @@ object TableManifest {
           val df = transform(readSnapshot(spark, tableDir, snap))
           df.write.mode("errorifexists").parquet(s"$tableDir/$name")
           Some(name -> collectGenMeta(spark, tableDir, name, statsCol,
-            Some(writtenSchemaJson(df.schema))))
+            writtenSchemaJson(df.schema)))
         } catch {
           case scala.util.control.NonFatal(e) =>
             // A failed attempt's partial write is ours and unreferenced —
@@ -1978,11 +1909,9 @@ object TableManifest {
           "optimizeManifested), then upsert.")
       requireNoMapping(snap, tableDir, "upsertBucketed")
       // migrate (one whole-table re-bucket) when any generation is
-      // untagged OR the tags' key provenance is unrecorded (legacy
-      // manifest): bucket-bounded reuse is only sound when the tags
-      // are PROVEN hashed under this call's keys
-      val migrate = snap.generations.exists(g => bucketOf(g).isEmpty) ||
-        (snap.buckets.isDefined && snap.bucketKeys.isEmpty)
+      // untagged: bucket-bounded reuse is only sound when every tag is
+      // recorded hashed under this call's keys (checked below)
+      val migrate = snap.generations.exists(g => bucketOf(g).isEmpty)
       if (!migrate) snap.buckets.foreach(m => require(m == numBuckets,
         s"upsertBucketed: table at $tableDir is bucketed $m-way; " +
           s"refusing a $numBuckets-way upsert (stale rows would strand " +
@@ -2038,6 +1967,7 @@ object TableManifest {
               else scanGens(spark, tableDir, snap, readGens)
             val merged = Temporal.latestSnapshot(
               cur.unionByName(batch.toDF()), keyCols, tsCol, tieCol)
+            val schemaJson = writtenSchemaJson(merged.schema)
             merged.withColumn(BucketCol, bucketExpr)
               // explicit partition count: AQE coalesces a keyed
               // repartition of a small batch to ONE task, which then
@@ -2050,10 +1980,6 @@ object TableManifest {
               .repartition(numBuckets, col(BucketCol))
               .write.mode("errorifexists")
               .partitionBy(BucketCol).parquet(stage.toString)
-            // every bucket generation of one staged write shares one
-            // schema — record the first's for the rest (one footer
-            // read per COMMIT, not per bucket)
-            var sharedSchema: Option[String] = None
             val moved = fs.listStatus(stage)
               .filter(e => e.isDirectory &&
                 e.getPath.getName.startsWith(s"$BucketCol="))
@@ -2064,11 +1990,8 @@ object TableManifest {
                   java.util.UUID.randomUUID.toString.take(8)
                 require(fs.rename(d.getPath, new Path(tableDir, gname)),
                   s"upsertBucketed: staging rename failed for bucket $b")
-                val gm = collectGenMeta(spark, tableDir, gname,
-                  inheritedStatsCol(snap, batch.columns.toSeq),
-                  sharedSchema)
-                if (sharedSchema.isEmpty) sharedSchema = gm.schemaJson
-                gname -> gm
+                gname -> collectGenMeta(spark, tableDir, gname,
+                  inheritedStatsCol(snap, batch.columns.toSeq), schemaJson)
               }.toSeq
             Some(moved)
           } catch {
@@ -2192,7 +2115,10 @@ object TableManifest {
     val stage = new Path(tableDir,
       s"._stage-delta-${java.util.UUID.randomUUID.toString.take(8)}")
     try {
-      Temporal.latestSnapshot(batch.toDF(), spec.keys, spec.ts, spec.tie)
+      val winners =
+        Temporal.latestSnapshot(batch.toDF(), spec.keys, spec.ts, spec.tie)
+      val schemaJson = writtenSchemaJson(winners.schema)
+      winners
         .withColumn(BucketCol,
           pmod(xxhash64(spec.keys.map(col): _*), lit(numBuckets.toLong))
             .cast("int"))
@@ -2201,8 +2127,6 @@ object TableManifest {
         .repartition(numBuckets, col(BucketCol))
         .write.mode("errorifexists")
         .partitionBy(BucketCol).parquet(stage.toString)
-      // one schema per staged write: first bucket's footer serves all
-      var sharedSchema: Option[String] = None
       fs.listStatus(stage)
         .filter(e => e.isDirectory &&
           e.getPath.getName.startsWith(s"$BucketCol="))
@@ -2213,10 +2137,7 @@ object TableManifest {
             java.util.UUID.randomUUID.toString.take(8)
           require(fs.rename(d.getPath, new Path(tableDir, gname)),
             s"stageDeltaGens: staging rename failed for bucket $b")
-          val gm = collectGenMeta(spark, tableDir, gname, statsCol,
-            sharedSchema)
-          if (sharedSchema.isEmpty) sharedSchema = gm.schemaJson
-          gname -> gm
+          gname -> collectGenMeta(spark, tableDir, gname, statsCol, schemaJson)
         }.toSeq
     } finally fs.delete(stage, true)
   }
@@ -2507,7 +2428,10 @@ object TableManifest {
       val staged: Option[Seq[(String, GenMeta)]] =
         try {
           val cur = scanGens(spark, tableDir, snap, readGens)
-          Temporal.latestSnapshot(cur, spec.keys, spec.ts, spec.tie)
+          val folded =
+            Temporal.latestSnapshot(cur, spec.keys, spec.ts, spec.tie)
+          val schemaJson = writtenSchemaJson(folded.schema)
+          folded
             .withColumn(BucketCol,
               pmod(xxhash64(spec.keys.map(col): _*), lit(n.toLong))
                 .cast("int"))
@@ -2515,8 +2439,6 @@ object TableManifest {
             .repartition(n, col(BucketCol))
             .write.mode("errorifexists")
             .partitionBy(BucketCol).parquet(stage.toString)
-          // one schema per staged write: first bucket serves all
-          var sharedSchema: Option[String] = None
           Some(fs.listStatus(stage)
             .filter(e => e.isDirectory &&
               e.getPath.getName.startsWith(s"$BucketCol="))
@@ -2527,10 +2449,8 @@ object TableManifest {
                 java.util.UUID.randomUUID.toString.take(8)
               require(fs.rename(d.getPath, new Path(tableDir, gname)),
                 s"compactDeltas: staging rename failed for bucket $b")
-              val gm = collectGenMeta(spark, tableDir, gname,
-                inheritedStatsCol(snap, cur.columns.toSeq), sharedSchema)
-              if (sharedSchema.isEmpty) sharedSchema = gm.schemaJson
-              gname -> gm
+              gname -> collectGenMeta(spark, tableDir, gname,
+                inheritedStatsCol(snap, cur.columns.toSeq), schemaJson)
             }.toSeq)
         } catch {
           case scala.util.control.NonFatal(e) =>
@@ -2754,8 +2674,9 @@ object TableManifest {
     // names re-align to each attempt's seq below)
     val stage = new Path(tableDir,
       s"._stage-part-${java.util.UUID.randomUUID.toString.take(8)}")
-    // one schema per staged write: first value's footer serves all
-    var sharedSchema: Option[String] = None
+    // the partition-stage copy is lifted into directory names, so
+    // every value's files carry exactly df's columns
+    val schemaJson = writtenSchemaJson(df.schema)
     var staged: Seq[(String, String, GenMeta)] =
       try {
         df.withColumn(PartStageCol, partValueExpr(partCol))
@@ -2776,10 +2697,8 @@ object TableManifest {
               java.util.UUID.randomUUID.toString.take(8)
             require(fs.rename(d.getPath, new Path(tableDir, gname)),
               s"appendPartitioned: staging rename failed for '$value'")
-            val gm = collectGenMeta(spark, tableDir, gname, None,
-              sharedSchema)
-            if (sharedSchema.isEmpty) sharedSchema = gm.schemaJson
-            (value, gname, gm)
+            (value, gname,
+              collectGenMeta(spark, tableDir, gname, None, schemaJson))
           }.toSeq
       } finally fs.delete(stage, true)
     def reapStaged(): Unit =
@@ -3046,46 +2965,23 @@ object TableManifest {
       // mergeSchema semantics: the logical schema must cover columns
       // present in ONLY SOME generations (the additive-append ingest
       // contract) — a single-file sample would silently omit them from
-      // the mapping and the next fold would drop their data. When every
-      // generation carries a recorded schema, the merged NAME LIST is
-      // computed from the manifest — first generation's fields in
-      // order, later generations' unseen fields appended in encounter
-      // order, exactly the field order Spark's parquet footer merge
-      // produces (footers merge in path order; generation names are
-      // zero-padded so path order IS commit order) — with ZERO footer
-      // reads instead of one per file. Pre-schema manifests fall back
-      // to the directory mergeSchema read and pay the footers.
-      val gensInPathOrder = snap.dataGens.sorted
-      val names: Seq[String] =
-        if (gensInPathOrder.forall(g =>
-            snap.meta.get(g).exists(_.schemaJson.isDefined))) {
-          val seen = scala.collection.mutable.LinkedHashSet.empty[String]
-          gensInPathOrder.foreach { g =>
-            org.apache.spark.sql.types.DataType
-              .fromJson(snap.meta(g).schemaJson.get)
-              .asInstanceOf[org.apache.spark.sql.types.StructType]
-              .fieldNames.foreach(seen += _)
-          }
-          seen.toSeq
-        } else
-          readSnapshot(spark, tableDir, snap, mergeSchema = true)
-            .columns.toSeq
+      // the mapping and the next fold would drop their data. The merged
+      // NAME LIST comes from the recorded schemas — first generation's
+      // fields in order, later generations' unseen fields appended in
+      // encounter order, exactly the field order Spark's parquet footer
+      // merge produces (footers merge in path order; generation names
+      // are zero-padded so path order IS commit order) — with ZERO
+      // footer reads.
+      val names = snap.dataGens.sorted
+        .flatMap(g => snap.meta(g).schema.fieldNames).distinct
       val mapping = ColumnMapping(names.size + 1,
         names.zipWithIndex.map { case (n, i) => (i + 1, n) })
       // bind every generation: its physical names ARE the current
-      // names (no rename has happened yet) — one footer read each
+      // names (no rename has happened yet)
       val meta = snap.generations.map { g =>
-        val base = snap.meta.getOrElse(g,
-          collectGenMeta(spark, tableDir, g, None))
-        // per-generation columns from the recorded schema when the
-        // manifest carries one — the directory read (one listing +
-        // footer per generation) only for pre-schema manifests
-        val genCols = base.schemaJson
-          .map(s => org.apache.spark.sql.types.DataType.fromJson(s)
-            .asInstanceOf[org.apache.spark.sql.types.StructType]
-            .fieldNames.toSet)
-          .getOrElse(spark.read.parquet(s"$tableDir/$g").columns.toSet)
-        g -> base.copy(cols =
+        val gm = snap.meta(g)
+        val genCols = gm.schema.fieldNames.toSet
+        g -> gm.copy(cols =
           mapping.cols.filter { case (_, n) => genCols.contains(n) })
       }.toMap
       if (commitAndCheckpoint(spark, tableDir, seq + 1,
@@ -3207,7 +3103,7 @@ object TableManifest {
     tomb.write.mode("errorifexists").parquet(s"$tableDir/$gname")
     val gm = withGenReapedOnFailure(spark, tableDir, gname) {
       collectGenMeta(spark, tableDir, gname, None,
-        Some(writtenSchemaJson(tomb.schema)))
+        writtenSchemaJson(tomb.schema))
     }
     var attempts = 0
     while (attempts <= maxRetries) {
@@ -3762,9 +3658,9 @@ object TableManifest {
       // key rows read separately by the resolver, whatever their tag
       val gens = snap.buckets match {
         // bucket routing is exact only when the layout is RECORDED
-        // hashed under this lookup's key columns — a mismatch (or an
-        // unrecorded legacy layout) falls back to the full set, the
-        // same conservative rule as every other pruning site
+        // hashed under this lookup's key columns — a mismatch falls
+        // back to the full set, the same conservative rule as every
+        // other pruning site
         case Some(n) if snap.bucketKeys.contains(keyCols) &&
             snap.dataGens.forall(g => bucketOf(g).isDefined) =>
           val touched = keys
@@ -3866,9 +3762,9 @@ object TableManifest {
     * resolves the old generation set or the new one, never a mix, no
     * maintenance window).
     *
-    * Decision: list the CURRENT generation set's data files (directory
-    * metadata — an append-heavy ingest leaves one small file per
-    * batch); the plan size is ceil(totalBytes / targetBytes) files. At
+    * Decision: price the CURRENT generation set's data files from the
+    * manifest inventory (an append-heavy ingest leaves one small file
+    * per batch); the plan size is ceil(totalBytes / targetBytes) files. At
     * or below it → `("skip", None)`: no generation written, no version
     * committed, the optimize is idempotent. Above it → a [[rewrite]]
     * coalescing to the plan size — coalesce, not repartition: merging
@@ -3883,7 +3779,6 @@ object TableManifest {
       : (String, Option[String]) = {
     require(targetBytes > 0,
       s"optimizeManifested: targetBytes must be positive: $targetBytes")
-    val fs = fsOf(spark, tableDir)
     // The WHOLE decide-then-execute cycle retries together: a resolved
     // generation can be vacuumed by two commits landing between the
     // resolve and the listing (the stalled-reader race read() retries
@@ -3902,15 +3797,9 @@ object TableManifest {
         require(gens.nonEmpty,
           s"TableManifest: no manifest at $tableDir — not a manifested " +
             "table (publish() first)")
-        // price from the manifest's file inventory when recorded —
-        // zero listings on the decision path; only legacy (pre-
-        // inventory) generations pay a listing each
-        val sizes: Seq[Long] = gens.flatMap { g =>
-          head.get.snap.meta.get(g) match {
-            case Some(gm) => gm.files.map(_.size)
-            case None => dataFiles(fs, s"$tableDir/$g").map(_.getLen)
-          }
-        }
+        // price from the manifest's file inventory — zero listings on
+        // the decision path
+        val sizes = gens.flatMap(g => head.get.snap.meta(g).files.map(_.size))
         val planFiles = math.max(1L,
           (sizes.sum + targetBytes - 1) / targetBytes)
         // skip covers any plan at or above the current file count, so a
@@ -3966,14 +3855,8 @@ object TableManifest {
       if (snap.tombstoneGens.isEmpty) false
       else {
         // fold + compact in one pass: price the plan from the
-        // manifest inventory (listing fallback for legacy gens)
-        val fs = fsOf(spark, tableDir)
-        val sizes = snap.dataGens.flatMap { g =>
-          snap.meta.get(g) match {
-            case Some(gm) => gm.files.map(_.size)
-            case None => dataFiles(fs, s"$tableDir/$g").map(_.getLen)
-          }
-        }
+        // manifest inventory
+        val sizes = snap.dataGens.flatMap(g => snap.meta(g).files.map(_.size))
         val plan = math.max(1L,
           (sizes.sum + targetBytes - 1) / targetBytes)
         rewrite(spark, tableDir, statsCol = statsCol)(
@@ -4007,7 +3890,8 @@ object TableManifest {
     * seq for re-claim (the ABA the permanent log exists to prevent —
     * [[vacuum]]), and an in-flight append's claim window is
     * wall-clock-unbounded — so before deleting ANYTHING this publishes
-    * the retention BARRIER (`_graft_min_seq` = the cut seq, monotonic),
+    * the retention BARRIER (the cut seq, as one more CAS-published value
+    * file under `_graft_barrier/` — monotonic, see [[raiseBarrier]]),
     * and every commit winner re-checks the barrier after its link and
     * UNDOES a below-barrier claim as an ordinary CAS loss (the full
     * argument lives on [[commitSnapshot]]; the spec races four live

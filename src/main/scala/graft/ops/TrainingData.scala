@@ -1000,7 +1000,14 @@ object TrainingData {
     * Determinism: scores are the q131 recipe (idf/tf tree mirrored
     * token-for-token in the oracle, DECIMAL(28,12) order-free sum, cast
     * double) — bit-equal cross-engine, so rank comparisons and the
-    * 1.0/rank IEEE divide are hash-exact. */
+    * 1.0/rank IEEE divide are hash-exact.
+    *
+    * Caching: the tokenized (id, md5-prefix, toks) frame and the
+    * tokenize+score subplan are `persist()`ed and never unpersisted
+    * here — the returned frame reads them lazily. The CALLER releases
+    * them with `spark.catalog.clearCache()` after its action (Bench
+    * and Verify do so after every query); a library caller that skips
+    * it keeps the cached token arrays for the session's lifetime. */
   def retrievalEval(docs: DataFrame, textCol: String = "text",
                     idCol: String = "doc_id", k: Int = 10): DataFrame = {
     val toks = graft.functions.wordTokens(col(textCol))

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,12 +10,11 @@ import graft.ops.TableManifest
   * manifest versions owned by the ENGINE's checkpoint, micro-batches
   * are generation-set diffs, restarts replay the checkpointed range
   * exactly, and history mutation surfaces as a stream error. */
-class GraftManifestSourceSpec extends AnyFunSuite {
+class GraftManifestSourceSpec extends AnyFunSuite with SuiteTempRoot {
   private lazy val spark = TestSpark.spark
 
   private def tmpDir(prefix: String): String =
-    Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), prefix).toString
+    suiteTempDir(prefix)
 
   private def rows(ids: Range, tag: String): DataFrame = {
     import spark.implicits._

@@ -13,12 +13,14 @@ import graft.ops.TableManifest
   * bucket-granular pruning under a live merge rule, metadata-only
   * partition drops, transform partitioning, type widening under column
   * mapping, and the SQL DML command surface. */
-class TableManifestChangefeedSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
+class TableManifestChangefeedSpec extends AnyFunSuite with SuiteTempRoot {
+  // a child session: the manifested-catalog names this suite registers
+  // point into its temp root, deleted in afterAll, so they must not
+  // stay registered in the shared session other suites query through
+  private lazy val spark = TestSpark.spark.newSession()
 
   private def tmpTable(prefix: String): String =
-    Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), prefix).toString + "/t"
+    suiteTempDir(prefix) + "/t"
 
   private def rows(ids: Range, ts: Long, tag: String): DataFrame = {
     import spark.implicits._
@@ -722,8 +724,7 @@ class TableManifestChangefeedSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("reserved column"))
   }
 
-  test("retention barrier is monotonic under competing publications " +
-      "and interops with the legacy replace-file form") {
+  test("retention barrier is monotonic under competing publications") {
     val tbl = tmpTable("barrier")
     TableManifest.publish(spark, tbl, rows(0 until 2, 0, "s"))
     (1 to 11).foreach(i =>
@@ -741,11 +742,6 @@ class TableManifestChangefeedSpec extends AnyFunSuite {
     val out = fs.create(low, true)
     out.write("""{"seq":1}""".getBytes("UTF-8")); out.close()
     assert(TableManifest.readBarrier(spark, tbl) == b)
-    // legacy single-file form still reads (max semantics)
-    val legacy = new org.apache.hadoop.fs.Path(tbl, "_graft_min_seq")
-    val out2 = fs.create(legacy, true)
-    out2.write(s"""{"seq":${b + 5}}""".getBytes("UTF-8")); out2.close()
-    assert(TableManifest.readBarrier(spark, tbl) == b + 5)
   }
 
   test("INSERT INTO … VALUES aligns positionally (arity-checked); a " +

@@ -7,12 +7,14 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.TableManifest
 
-class TableManifestSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
+class TableManifestSpec extends AnyFunSuite with SuiteTempRoot {
+  // a child session: the manifested-catalog names this suite registers
+  // point into its temp root, deleted in afterAll, so they must not
+  // stay registered in the shared session other suites query through
+  private lazy val spark = TestSpark.spark.newSession()
 
   private def tmpTable(prefix: String): String =
-    Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), prefix).toString + "/t"
+    suiteTempDir(prefix) + "/t"
 
   test("publish/read round-trips; rewrite advances the pointer and " +
       "retains exactly the previous generation; direct reads of the " +
@@ -303,8 +305,7 @@ class TableManifestSpec extends AnyFunSuite {
   test("streamingSink is exactly-once under a REAL foreachBatch replay: " +
       "re-offering the last batch after a torn checkpoint commits nothing") {
     import spark.implicits._
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "manifsink").toString
+    val base = suiteTempDir("manifsink")
     val in = s"$base/in"; val tbl = s"$base/t"; val ckpt = s"$base/ckpt"
     new java.io.File(in).mkdirs()
     def writeInput(name: String, from: Int, n: Int): Unit =
@@ -380,8 +381,7 @@ class TableManifestSpec extends AnyFunSuite {
       "manifest, exactly-once under a REAL torn-checkpoint replay, with " +
       "the superseded snapshot still time-travel-readable") {
     import spark.implicits._
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "manifup").toString
+    val base = suiteTempDir("manifup")
     val in = s"$base/in"; val tbl = s"$base/t"; val ckpt = s"$base/ckpt"
     new java.io.File(in).mkdirs()
     def writeInput(name: String, rows: Seq[(Long, Long, String)]): Unit =
@@ -1072,8 +1072,7 @@ class TableManifestSpec extends AnyFunSuite {
       "generations (every base carried by name), the replay skips " +
       "outright, and reads stay merged across batches") {
     import spark.implicits._
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "manifdsink").toString
+    val base = suiteTempDir("manifdsink")
     val in = s"$base/in"; val tbl = s"$base/t"; val ckpt = s"$base/ckpt"
     new java.io.File(in).mkdirs()
     def writeInput(name: String, rows: Seq[(Long, Long, String)]): Unit =
@@ -1121,8 +1120,7 @@ class TableManifestSpec extends AnyFunSuite {
   test("upsertSinkBucketed is exactly-once under a REAL torn-checkpoint " +
       "replay, and each micro-batch rewrites only its touched buckets") {
     import spark.implicits._
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "manifbsink").toString
+    val base = suiteTempDir("manifbsink")
     val in = s"$base/in"; val tbl = s"$base/t"; val ckpt = s"$base/ckpt"
     new java.io.File(in).mkdirs()
     def writeInput(name: String, rows: Seq[(Long, Long, String)]): Unit =
@@ -1221,9 +1219,9 @@ class TableManifestSpec extends AnyFunSuite {
   }
 
   test("manifest-recorded file inventories: a pruned read resolves its " +
-      "file set with ZERO directory listings (file lists ride the " +
-      "commit JSON); a legacy manifest without inventories falls back " +
-      "to one pooled listing per generation, conservatively whole") {
+      "file set from the commit JSON alone (file lists ride the " +
+      "manifest); a head manifest without inventories is refused, " +
+      "naming its path, instead of falling back to listings") {
     import spark.implicits._
     val tbl = tmpTable("manifinv")
     TableManifest.publish(spark, tbl,
@@ -1234,44 +1232,52 @@ class TableManifestSpec extends AnyFunSuite {
         Seq((500L + i, "late")).toDF("k", "tag").coalesce(1),
         statsCol = Some("k")))
     val info = TableManifest.prunedFilesInfo(spark, tbl, "k", 100, 140)
-    assert(info.listings == 0,
-      s"an inventoried table must resolve pruning from the manifest " +
-        s"alone, got ${info.listings} listings")
     assert(info.total == 11 && info.files.size < info.total,
       s"${info.files.size}/${info.total}")
-    // emulate a LEGACY manifest (pre-inventory wire form): strip the
-    // meta block from the head manifest on disk — the fallback must
-    // list each generation once (pooled) and include every file
-    val fs = new org.apache.hadoop.fs.Path(tbl)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val head = fs.listStatus(new org.apache.hadoop.fs.Path(tbl))
-      .map(_.getPath).filter(_.getName.startsWith("_graft_manifest-"))
-      .maxBy(_.getName)
-    val body = {
-      val in = fs.open(head)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    }
-    val cut = body.indexOf(""","meta":""")
-    assert(cut > 0, s"expected a meta block in $body")
-    val legacyBody = body.substring(0, cut) + "}"
-    fs.delete(head, false)
-    val out = fs.create(head, false)
-    out.write(legacyBody.getBytes("UTF-8")); out.close()
-    // drop the checkpoint cache too — it still carries the inventory
-    fs.listStatus(new org.apache.hadoop.fs.Path(tbl)).foreach { e =>
-      val n = e.getPath.getName
-      if (n.startsWith("_graft_checkpoint-") || n == "_graft_last_checkpoint")
-        fs.delete(e.getPath, e.isDirectory)
-    }
-    val legacy = TableManifest.prunedFilesInfo(spark, tbl, "k", 100, 140)
-    assert(legacy.listings == 4,
-      s"legacy generations (4: publish + 3 appends) must fall back to " +
-        s"one listing each, got ${legacy.listings}")
-    assert(legacy.files.size == legacy.total && legacy.total == 11,
-      "legacy fallback must be conservative (all files included)")
     assert(TableManifest.readPruned(spark, tbl, "k", 100, 140)
       .filter(col("k").between(100, 140)).count() == 41)
+    // a pre-inventory body (the meta block stripped from the head
+    // manifest on disk) is refused at the parse: no listing fallback
+    // remains, so pruning and reads fail loudly, naming the manifest
+    val head = rewriteHeadManifest(tbl) { body =>
+      val cut = body.indexOf(""","meta":""")
+      assert(cut > 0, s"expected a meta block in $body")
+      body.substring(0, cut) + "}"
+    }
+    val e1 = intercept[IllegalStateException] {
+      TableManifest.prunedFilesInfo(spark, tbl, "k", 100, 140)
+    }
+    assert(e1.getMessage.contains(head) &&
+      e1.getMessage.contains("no recorded inventory"), e1.getMessage)
+    val e2 = intercept[IllegalStateException] {
+      TableManifest.readPruned(spark, tbl, "k", 100, 140).count()
+    }
+    assert(e2.getMessage.contains(head), e2.getMessage)
+  }
+
+  test("one manifest wire format: a head manifest with no format or an " +
+      "unknown one makes read, append and readVersion refuse the table " +
+      "with an error naming the manifest path and the format found") {
+    import spark.implicits._
+    Seq(
+      "<none>" -> ((b: String) => b.replace("""{"format":1,""", "{")),
+      "99" -> ((b: String) => b.replace(""""format":1""", """"format":99"""))
+    ).foreach { case (found, edit) =>
+      val tbl = tmpTable("maniffmt")
+      TableManifest.publish(spark, tbl, Seq((1L, "a")).toDF("id", "tag"))
+      TableManifest.append(spark, tbl, Seq((2L, "b")).toDF("id", "tag"))
+      val head = rewriteHeadManifest(tbl)(edit)
+      def refused(what: String)(f: => Any): Unit = {
+        val e = intercept[IllegalStateException](f)
+        assert(e.getMessage.contains(head) &&
+          e.getMessage.contains(s"has format $found"),
+          s"$what on format $found: ${e.getMessage}")
+      }
+      refused("read")(TableManifest.read(spark, tbl).count())
+      refused("append")(TableManifest.append(spark, tbl,
+        Seq((3L, "c")).toDF("id", "tag")))
+      refused("readVersion")(TableManifest.readVersion(spark, tbl, 2L))
+    }
   }
 
   test("readPruned composes with the table rules: tombstoned rows stay " +
@@ -1521,8 +1527,7 @@ class TableManifestSpec extends AnyFunSuite {
       "REBUILT checkpoint (ids restart at 0) fails LOUDLY instead of " +
       "silently skipping; a fresh writerId is the recovery") {
     import spark.implicits._
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "manifmw").toString
+    val base = suiteTempDir("manifmw")
     val tbl = s"$base/t"
     val schema = "id BIGINT, src STRING"
     new java.io.File(s"$base/inA").mkdirs()
@@ -1746,7 +1751,7 @@ class TableManifestSpec extends AnyFunSuite {
     // wins — the manifest was deleted) must self-undo and read as a
     // CAS loss, leaving no phantom behind
     val snap = TableManifest.parseSnapshotBody(
-      """{"generations":["_gen-000002-deadbeef"]}""", "test")
+      minimalBody("_gen-000002-deadbeef"), "test")
     assert(!TableManifest.commitSnapshot(spark, tbl, 5L, snap),
       "a below-barrier claim must report a CAS loss")
     val fs = new org.apache.hadoop.fs.Path(tbl)
@@ -1791,8 +1796,8 @@ class TableManifestSpec extends AnyFunSuite {
     val phantom = new org.apache.hadoop.fs.Path(
       s"$tbl/_graft_manifest-000003.json")
     val out = fs.create(phantom, false)
-    out.write("""{"generations":["_gen-000002-deadbeef"]}"""
-      .getBytes("UTF-8")); out.close()
+    out.write(minimalBody("_gen-000002-deadbeef").getBytes("UTF-8"))
+    out.close()
     TableManifest.recover(spark, tbl)
     assert(!fs.exists(phantom),
       "recover must reap phantom below-barrier manifests")
@@ -1858,6 +1863,38 @@ class TableManifestSpec extends AnyFunSuite {
       assert(byVersion.nonEmpty)
     }
   }
+
+  /** Replace the head manifest's body on disk with `edit(body)` and
+    * drop the checkpoint cache (which still carries the old state);
+    * returns the head manifest's path. */
+  private def rewriteHeadManifest(tbl: String)(edit: String => String)
+      : String = {
+    val fs = new org.apache.hadoop.fs.Path(tbl)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    val head = fs.listStatus(new org.apache.hadoop.fs.Path(tbl))
+      .map(_.getPath).filter(_.getName.startsWith("_graft_manifest-"))
+      .maxBy(_.getName)
+    val body = {
+      val in = fs.open(head)
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+      finally in.close()
+    }
+    fs.delete(head, false)
+    val out = fs.create(head, false)
+    out.write(edit(body).getBytes("UTF-8")); out.close()
+    fs.listStatus(new org.apache.hadoop.fs.Path(tbl)).foreach { e =>
+      val n = e.getPath.getName
+      if (n.startsWith("_graft_checkpoint-") || n == "_graft_last_checkpoint")
+        fs.delete(e.getPath, e.isDirectory)
+    }
+    head.toUri.getPath
+  }
+
+  /** A format-1 body listing one generation with an empty inventory. */
+  private def minimalBody(gen: String, extra: String = ""): String =
+    s"""{"format":1,"generations":["$gen"]$extra,"meta":""" +
+      s"""{"$gen":{"schema":"{\\"type\\":\\"struct\\",""" +
+      s"""\\"fields\\":[]}","files":[]}}}"""
 
   private def readManifest(tbl: String, v: Long): String = {
     val p = new org.apache.hadoop.fs.Path(
@@ -1978,26 +2015,34 @@ class TableManifestSpec extends AnyFunSuite {
     // watermark (phantom default-writer skip = quiet data loss) and
     // writers:{"buckets":3} as the bucket modulus (wrong-modulus point
     // reads) — pin the structural fix at the parser seam
-    val s = TableManifest.parseSnapshotBody(
-      """{"generations":["_gen-000001-aa"],""" +
-        """"writers":{"batch":7,"buckets":3,"seq":9}}""", "test")
+    val s = TableManifest.parseSnapshotBody(minimalBody("_gen-000001-aa",
+      ""","writers":{"batch":7,"buckets":3,"seq":9,"format":2}"""), "test")
     assert(s.watermark("batch").contains(7L))
     assert(s.watermark("buckets").contains(3L))
+    assert(s.watermark("format").contains(2L),
+      "a writers-map key must never read as the format field")
     assert(s.watermark(TableManifest.DefaultWriter).isEmpty,
-      "a writers-map key must never read as the legacy batch field")
+      "a writers-map key must never read as a default-writer watermark")
     assert(s.buckets.isEmpty,
       "a writers-map key must never read as the bucket modulus")
-    // and the legacy + modern fields still parse from the top level
-    val legacy = TableManifest.parseSnapshotBody(
-      """{"generations":["g"],"batch":4,"buckets":16}""", "test")
-    assert(legacy.watermark(TableManifest.DefaultWriter).contains(4L))
-    assert(legacy.buckets.contains(16))
+    // the modern fields still parse from the top level ...
+    val top = TableManifest.parseSnapshotBody(
+      minimalBody("g", ""","buckets":16"""), "test")
+    assert(top.buckets.contains(16))
+    // ... and a pre-format body (the old top-level "batch" watermark
+    // form) is refused, not aliased into a default-writer watermark
+    val e = intercept[IllegalStateException] {
+      TableManifest.parseSnapshotBody(
+        """{"generations":["g"],"batch":4,"buckets":16}""", "legacy-body")
+    }
+    assert(e.getMessage.contains("legacy-body") &&
+      e.getMessage.contains("format <none>"), e.getMessage)
     // belt and braces: the reserved names are refused before they can
     // ever be rendered into a manifest
     val tbl = tmpTable("manifresv")
     import spark.implicits._
     TableManifest.publish(spark, tbl, Seq((1L, "a")).toDF("id", "tag"))
-    Seq("batch", "buckets", "writers", "generations").foreach { w =>
+    Seq("batch", "buckets", "writers", "generations", "format").foreach { w =>
       intercept[IllegalArgumentException] {
         TableManifest.append(spark, tbl, Seq((2L, "b")).toDF("id", "tag"),
           batchId = Some(0L), writerId = w)
@@ -2112,16 +2157,29 @@ class TableManifestSpec extends AnyFunSuite {
       Seq("k"), "v", "tag", numBuckets = 4)
     TableManifest.upsertBucketedDelta(spark, tbl, rows(8, 12),
       Seq("k"), "v", "tag", numBuckets = 4)
-    TableManifest.deleteRows(spark, tbl, Seq(63L).toDF("k"), Seq("k"))
-    val head = TableManifest.resolveHead(spark, tbl).get
-    head.snap.generations.foreach { g =>
-      val rec = head.snap.meta(g).schemaJson
-      assert(rec.isDefined, s"generation $g lost its recorded schema")
-      val inferred = spark.read.parquet(s"$tbl/$g").schema.json
-      assert(rec.contains(inferred),
-        s"generation $g recorded schema != footer inference:\n" +
-          s"  recorded: ${rec.get}\n  inferred: $inferred")
+    TableManifest.upsertDelta(spark, tbl, rows(12, 16),
+      Seq("k"), "v", "tag", numBuckets = 4)
+    def assertHeadIdentity(t: String): Unit = {
+      val head = TableManifest.resolveHead(spark, t).get
+      head.snap.generations.foreach { g =>
+        val rec = head.snap.meta(g).schemaJson
+        val inferred = spark.read.parquet(s"$t/$g").schema.json
+        assert(rec == inferred,
+          s"generation $g recorded schema != footer inference:\n" +
+            s"  recorded: $rec\n  inferred: $inferred")
+      }
     }
+    // staged-bucket, delta (both delta verbs) and plain generations
+    val beforeFold = TableManifest.resolveHead(spark, tbl).get.snap
+    assert(beforeFold.deltaGens.size >= 2, beforeFold.generations.toString)
+    assertHeadIdentity(tbl)
+    // the bucket-bounded fold's staged generations, then a tombstone
+    val folded = TableManifest.compactDeltas(spark, tbl)
+    assert(folded.exists(_.nonEmpty), s"expected a bucketed fold: $folded")
+    assert(TableManifest.resolveHead(spark, tbl).get.snap.buckets
+      .contains(4), "the fold must keep the bucket layout")
+    TableManifest.deleteRows(spark, tbl, Seq(63L).toDF("k"), Seq("k"))
+    assertHeadIdentity(tbl)
     // the partition-staged writer too (separate table: partition rules
     // and merge rules don't mix)
     val tbl2 = tmpTable("manifschemap")
@@ -2129,12 +2187,6 @@ class TableManifestSpec extends AnyFunSuite {
       rows(0, 4).withColumn("part", col("k") % 2))
     TableManifest.appendPartitioned(spark, tbl2,
       rows(4, 32).withColumn("part", col("k") % 2), "part")
-    val head2 = TableManifest.resolveHead(spark, tbl2).get
-    head2.snap.generations.foreach { g =>
-      val rec = head2.snap.meta(g).schemaJson
-      assert(rec.isDefined, s"generation $g lost its recorded schema")
-      assert(rec.contains(spark.read.parquet(s"$tbl2/$g").schema.json),
-        s"partition generation $g recorded schema != footer inference")
-    }
+    assertHeadIdentity(tbl2)
   }
 }
